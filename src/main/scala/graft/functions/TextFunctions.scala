@@ -87,15 +87,13 @@ object TextFunctions {
 
   /** LSH band keys for a MinHash signature: split into `bands` bands of
     * rows = numHashes/bands, hash each band. Docs sharing ANY band key are
-    * near-dup candidates. Returns array of (bandIdx, bandHash) structs. */
+    * near-dup candidates. Returns array of (band, bucket) structs, bucket
+    * = `xxhash64(slice(signature, band*rows+1, rows), band)` computed in
+    * one native loop (org.apache.spark.sql.graft.MinHashBandKeys). */
   def bandKeys(signature: Column, bands: Int, numHashes: Int): Column = {
     require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
-    val rows = numHashes / bands
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(slice(signature, b * rows + 1, rows), lit(b)).as("bucket"))
-    }: _*)
+    org.apache.spark.sql.graft.BandKeyExpressions.minhashBandKeys(
+      signature, bands, numHashes / bands)
   }
 
   /** 64-bit SimHash over tokens: bit j of the result is 1 iff the sum of

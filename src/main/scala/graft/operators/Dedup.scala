@@ -282,9 +282,9 @@ object Dedup {
     def cappedBands(df: DataFrame) = df
       .select(
         col(idCol).as("graft_id"),
-        // separate projection: graft_sig is referenced `bands` times by
-        // bandKeys' slices, so CollapseProject keeps it — the 128-hash
-        // kernel runs once per row, not once per band
+        // bandKeys reads graft_sig once (one native loop over all
+        // bands), so the 128-hash kernel runs once per row however the
+        // two projections collapse
         minhashTextSignature(col(textCol), shingleN, numHashes, seed)
           .as("graft_sig"))
       .select(col("graft_id"),

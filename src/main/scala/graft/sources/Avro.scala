@@ -189,17 +189,16 @@ object Avro {
     * function over the pinned element schema, arrays/maps hoist their
     * element converter once — value-for-value identical to
     * [[toSparkValue]] (nested records millis-normalize per field exactly
-    * as [[recordToRow]] does; bare array/map timestamp elements stay on
-    * the micros reading, matching the generic path's behavior). */
+    * as [[recordToRow]] does). Bare array/map timestamp elements read by
+    * their own schema's logical type, as spark-avro does; the generic
+    * [[toSparkValue]] has no element schema and reads them as micros. */
   private[sources] def rowReader(
       avroSchema: Schema, st: StructType): GenericRecord => Row = {
     val n = st.fields.length
     val pos: Array[Int] = st.fields.map(f => avroSchema.getField(f.name).pos())
     val convs: Array[Any => Any] = st.fields.map { f =>
       val fieldSch = unwrap(avroSchema.getField(f.name).schema())
-      val isMillis = fieldSch.exists(s =>
-        Option(s.getLogicalType).exists(_.getName.endsWith("-millis")))
-      valueReader(f.dataType, isMillis, fieldSch)
+      valueReader(f.dataType, fieldSch.exists(millisSchema), fieldSch)
     }
     rec => {
       val arr = new Array[Any](n)
@@ -286,11 +285,11 @@ object Avro {
       }
       case at: ArrayType => sch match {
         case Some(as) if as.getType == Schema.Type.ARRAY =>
-          // element conversions mirror toSparkValue: timestamps read as
-          // micros (no field-level millis flag exists for bare elements),
-          // record elements millis-normalize via their own rowReader
-          val ec = valueReader(at.elementType, isMillis = false,
-            Some(unwrap(as.getElementType).getOrElse(as.getElementType)))
+          // a bare timestamp element reads by its own logical type, as
+          // spark-avro does; record elements millis-normalize via their
+          // own rowReader
+          val es = unwrap(as.getElementType).getOrElse(as.getElementType)
+          val ec = valueReader(at.elementType, millisSchema(es), Some(es))
           val conv: Any => Any = {
             case a: java.util.Collection[_] =>
               a.asScala.map(v => if (v == null) null else ec(v)).toSeq
@@ -301,8 +300,8 @@ object Avro {
       }
       case mt: MapType => sch match {
         case Some(ms) if ms.getType == Schema.Type.MAP =>
-          val vc = valueReader(mt.valueType, isMillis = false,
-            Some(unwrap(ms.getValueType).getOrElse(ms.getValueType)))
+          val vs = unwrap(ms.getValueType).getOrElse(ms.getValueType)
+          val vc = valueReader(mt.valueType, millisSchema(vs), Some(vs))
           val conv: Any => Any = {
             case m: java.util.Map[_, _] =>
               m.asScala.map { case (k, x) =>
@@ -332,14 +331,13 @@ object Avro {
       sch: Schema, st: StructType): Row => GenericRecord = {
     val fields = sch.getFields.asScala.toArray
     val idx: Array[Int] = fields.map(f => st.fieldIndex(f.name()))
-    val nullOk: Array[Boolean] = fields.map(f =>
-      f.schema().getType == Schema.Type.UNION &&
-        f.schema().getTypes.asScala.exists(_.getType == Schema.Type.NULL))
+    val nullOk: Array[Boolean] = fields.map(f => acceptsNull(f.schema()))
+    val recName = sch.getFullName
     val convs: Array[Any => Any] = fields.map { f =>
       val unwrapped = unwrap(f.schema()).getOrElse(f.schema())
-      valueWriter(unwrapped, Some(st.fields(st.fieldIndex(f.name())).dataType))
+      valueWriter(unwrapped, Some(st.fields(st.fieldIndex(f.name())).dataType),
+        s"field ${f.name()} of $recName")
     }
-    val recName = sch.getFullName
     row => {
       val rec = new GenericData.Record(sch)
       var i = 0
@@ -363,9 +361,12 @@ object Avro {
     * stay bit-identical). Nested records/arrays/maps compile recursively
     * when the Spark-side type is at hand (r19-opt — the probe measured
     * the GenericRecordBuilder-per-nested-record generic path at ~2-3×);
-    * without it they fall back to [[toAvroValue]]. */
+    * without it they fall back to [[toAvroValue]]. `where` names the
+    * position (field, array element, map value) in the null refusal: a
+    * NULL element whose schema has no null branch refuses here, not as an
+    * NPE inside the Hadoop datum writer. */
   private def valueWriter(
-      sch: Schema, dt: Option[DataType] = None): Any => Any = sch.getType match {
+      sch: Schema, dt: Option[DataType], where: String): Any => Any = sch.getType match {
     case Schema.Type.INT if sch.getLogicalType != null => {
       case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
       case d: java.time.LocalDate => d.toEpochDay.toInt
@@ -397,10 +398,12 @@ object Avro {
     case Schema.Type.ARRAY => dt match {
       case Some(ArrayType(et, _)) =>
         val elemSch = sch.getElementType
-        val ec = valueWriter(unwrap(elemSch).getOrElse(elemSch), Some(et))
+        val elem = s"array element of $where"
+        val ec = nullChecked(elemSch, elem,
+          valueWriter(unwrap(elemSch).getOrElse(elemSch), Some(et), elem))
         val conv: Any => Any = {
           case a: scala.collection.Seq[_] =>
-            a.map(v => if (v == null) null else ec(v)).asJava
+            a.map(ec).asJava
           case x => x
         }
         conv
@@ -409,12 +412,12 @@ object Avro {
     case Schema.Type.MAP => dt match {
       case Some(MapType(_, vt, _)) =>
         val vSch = sch.getValueType
-        val vc = valueWriter(unwrap(vSch).getOrElse(vSch), Some(vt))
+        val value = s"map value of $where"
+        val vc = nullChecked(vSch, value,
+          valueWriter(unwrap(vSch).getOrElse(vSch), Some(vt), value))
         val conv: Any => Any = {
           case m: scala.collection.Map[_, _] =>
-            m.map { case (k, x) =>
-              k.toString -> (if (x == null) null else vc(x))
-            }.asJava
+            m.map { case (k, x) => k.toString -> vc(x) }.asJava
           case x => x
         }
         conv
@@ -423,17 +426,25 @@ object Avro {
     case _ => identity
   }
 
+  /** `conv` for non-null values; NULL passes where `sch` has a null
+    * branch and refuses, naming `where`, where it has none. */
+  private def nullChecked(sch: Schema, where: String, conv: Any => Any): Any => Any = {
+    val nullOk = acceptsNull(sch)
+    v => if (v != null) conv(v)
+      else if (nullOk) null
+      else throw new IllegalArgumentException(
+        s"$where does not accept null (avro schema has no null branch)")
+  }
+
   private[sources] def recordToRow(r: GenericRecord, st: StructType): Row =
     Row.fromSeq(st.fields.toSeq.map { f =>
       val raw = r.get(f.name)
       // normalize timestamp-millis to micros-backed Instant
-      val fieldSchema = r.getSchema.getField(f.name).schema()
-      val isMillis = unwrap(fieldSchema).exists(s =>
-        Option(s.getLogicalType).exists(_.getName.endsWith("-millis")))
+      val millis = unwrap(r.getSchema.getField(f.name).schema()).exists(millisSchema)
       (raw, f.dataType) match {
-        case (l: java.lang.Long, TimestampType) if isMillis =>
+        case (l: java.lang.Long, TimestampType) if millis =>
           java.time.Instant.ofEpochMilli(l)
-        case (l: java.lang.Long, TimestampNTZType) if isMillis =>
+        case (l: java.lang.Long, TimestampNTZType) if millis =>
           toSparkValue(l * 1000L, TimestampNTZType)
         case _ => toSparkValue(raw, f.dataType)
       }
@@ -449,6 +460,15 @@ object Avro {
       if (a.isEmpty) java.math.BigInteger.ZERO else new java.math.BigInteger(a)
     new java.math.BigDecimal(unscaled, dt.scale)
   }
+
+  /** A `*-millis` timestamp: its longs count milliseconds, not micros. */
+  private def millisSchema(s: Schema): Boolean =
+    Option(s.getLogicalType).exists(_.getName.endsWith("-millis"))
+
+  /** Whether a schema position accepts null (a union with a null branch). */
+  private def acceptsNull(s: Schema): Boolean =
+    s.getType == Schema.Type.UNION &&
+      s.getTypes.asScala.exists(_.getType == Schema.Type.NULL)
 
   private def unwrap(s: Schema): Option[Schema] = s.getType match {
     case Schema.Type.UNION =>

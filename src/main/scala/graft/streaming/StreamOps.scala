@@ -981,7 +981,17 @@ object StreamOps {
       .start()
 
   /** The per-batch step behind [[nearDupStream]] (driveable directly in
-    * tests and backfills). Returns the admitted rows of `batch`.
+    * tests and backfills). Returns the admitted rows of `batch`,
+    * persisted — the caller unpersists them after its sink; every other
+    * cache the trigger takes is released before this returns.
+    *
+    * One fused text→signature pass feeds ONE LSH candidate join (see
+    * [[nearDupAdmitCore]]): the batch's band keys against the capped
+    * history bands and the batch's own bands together. History pairs
+    * verify by signature agreement ≥ `threshold` (the store holds no
+    * text), batch pairs by exact shingle Jaccard; a near-dup of history,
+    * or the larger id of a verified in-batch pair, drops. `maxBucket`
+    * caps history buckets; in-batch buckets are capped at 1,000 docs.
     *
     * Store layout (all maintained by [[maintainNearDupStore]]):
     *  - `<store>/batch=<id>/`       admitted MinHash signatures
@@ -1100,12 +1110,12 @@ object StreamOps {
     if (hasHistory && (!fs.exists(bandsRoot) || !fs.exists(bucketsRoot)))
       bootstrapNearDupSidecars(spark, fs, storePath, numHashes, bands)
 
-    val history = (if (hasHistory)
+    val history = if (hasHistory)
       spark.read.parquet(storePath).filter(col("batch") =!= batchId)
         .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
     else
       sigB.select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-        .limit(0)).persist()
+        .limit(0)
 
     // precomputed band keys + bucket histogram — READ, never recomputed
     val bandH = if (hasHistory)
@@ -1126,10 +1136,10 @@ object StreamOps {
       bandH.groupBy("band", "bucket").agg(count(lit(1)).as("n")))
       .filter(col("n") <= maxBucket)
       .select("band", "bucket")
-    val (admitted, candidates) = nearDupAdmitCore(
+    val (admitted, release) = nearDupAdmitCore(
       batch, idCol, textCol, sigB, bandB, history, bandH, smallBuckets,
       _ => spark.read.parquet(storePath).filter(col("batch") =!= batchId),
-      hasHistory, numHashes, bands, shingleN, threshold, maxVerifyFetch)
+      hasHistory, numHashes, shingleN, threshold, maxVerifyFetch)
     // admitted signatures (+ their band keys and bucket-count partial) →
     // this batch's own partitions; overwrite makes the replayed attempt
     // idempotent, and a crash between the three writes replays the whole
@@ -1150,8 +1160,7 @@ object StreamOps {
       .write.mode("overwrite").parquet(s"$storePath$BucketsSuffix/batch=$batchId")
     sigA.unpersist()
     sigB.unpersist()
-    history.unpersist()
-    candidates.unpersist()
+    release()
     admitted
     }
   }
@@ -1195,9 +1204,29 @@ object StreamOps {
       .start()
   }
 
+  /** Within-batch bucket cap of the MinHash gate: a (band, bucket) held
+    * by more than this many docs of ONE batch yields no in-batch
+    * candidates (the batch operator's skew guard, and the value the gate
+    * has always applied). The history side keeps the per-call
+    * `maxBucket` over the store's bucket counts. */
+  private val InBatchMaxBucket = 1000
+
   /** The candidate → verify → admit middle shared by the legacy and
     * commit-log store modes — everything between "history frames are in
     * hand" and "write the admitted rows", which is mode-independent.
+    *
+    * ONE LSH candidate pass: the batch's band rows (`bandB`, from the
+    * single signature pass `sigB`) join once against a build side that
+    * holds the history band rows under the store cap (`smallBuckets`)
+    * and the batch's own band rows under [[InBatchMaxBucket]] (counted
+    * within the batch; singleton buckets cannot pair). A batch pair is
+    * kept on its larger id, the one that drops. Then:
+    *  - history candidates verify by MinHash signature agreement ≥
+    *    `threshold` (the store keeps signatures, not text);
+    *  - batch candidates verify by exact shingle Jaccard ≥ `threshold`
+    *    (the text is in hand; shingles are built for candidate docs
+    *    only). The larger id of a verified pair drops — the batch
+    *    operator's pairwise convention.
     *
     * History signatures for the verify join: the candidate id set is
     * bounded by batch size × maxBucket, so in the common case it is tiny
@@ -1212,8 +1241,9 @@ object StreamOps {
     * `maxVerifyFetch` ids, fall back to the full-scan join against
     * `history`.
     *
-    * Returns (admitted [persisted], candidates [persisted]) — the caller
-    * unpersists both after its writes materialize them. */
+    * Returns (admitted [persisted], release) — the caller runs `release`
+    * (the candidate and shingle caches) once its writes have
+    * materialized `admitted`, and unpersists `admitted` after its sink. */
   private def nearDupAdmitCore(
       batch: DataFrame,
       idCol: String,
@@ -1226,52 +1256,76 @@ object StreamOps {
       histSigs: Array[Any] => DataFrame,
       hasHistory: Boolean,
       numHashes: Int,
-      bands: Int,
       shingleN: Int,
       threshold: Double,
-      maxVerifyFetch: Int): (DataFrame, DataFrame) = {
-    val candidates = bandB
-      .join(bandH.join(smallBuckets, Seq("band", "bucket"), "left_semi"),
-        Seq("band", "bucket"))
-      .select("graft_id", "hist_id").distinct()
-      .persist() // read twice: id-set probe + verify join
+      maxVerifyFetch: Int): (DataFrame, () => Unit) = {
+    import graft.functions.TextFunctions.{jaccardSortedDistinct, shingles}
+    val batchSide = bandB
+      .withColumn("graft_n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
+      .filter(col("graft_n").between(2, InBatchMaxBucket))
+      .select(col("band"), col("bucket"), col("graft_id").as("graft_other"),
+        lit(false).as("graft_hist"))
+    val build = if (!hasHistory) batchSide else bandH
+      .join(smallBuckets, Seq("band", "bucket"), "left_semi")
+      .select(col("band"), col("bucket"), col("hist_id").as("graft_other"),
+        lit(true).as("graft_hist"))
+      .unionByName(batchSide)
+    val candidates = bandB.join(build, Seq("band", "bucket"))
+      .filter(col("graft_hist") || col("graft_other") < col("graft_id"))
+      .select("graft_id", "graft_other", "graft_hist").distinct()
+      .persist() // read by the history id probe and both verifies
 
     // cap+1 probe, overflow-safe for maxVerifyFetch = Int.MaxValue
     val capProbe = math.min(maxVerifyFetch.toLong + 1L, Int.MaxValue.toLong).toInt
+    val histCand = candidates.filter(col("graft_hist"))
+      .select(col("graft_id"), col("graft_other").as("hist_id"))
     val candIds =
-      if (hasHistory) candidates.select("hist_id").distinct().limit(capProbe)
+      if (hasHistory) histCand.select("hist_id").distinct().limit(capProbe)
         .collect().map(_.get(0))
       else Array.empty[Any]
-    val histVerify =
-      if (!hasHistory || candIds.isEmpty) history.limit(0)
-      else if (candIds.length <= maxVerifyFetch) {
-        val cover = idCoverFilter(col("graft_id"), candIds)
-        histSigs(candIds)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_id").isInCollection(candIds.toSeq))
-          .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-      } else history
-
     // MinHash estimator: fraction of agreeing signature positions
     val agree = size(filter(
       zip_with(col("graft_sig"), col("hist_sig"), (a, b) => a === b),
       x => x)).cast("double") / numHashes
-    val dupOfHistory = candidates
-      .join(sigB, "graft_id")
-      .join(histVerify, "hist_id")
-      .filter(agree >= threshold)
-      .select(col("graft_id").as(idCol)).distinct()
+    val dupOfHistory =
+      if (candIds.isEmpty) None
+      else {
+        val histVerify = if (candIds.length <= maxVerifyFetch) {
+          val cover = idCoverFilter(col("graft_id"), candIds)
+          histSigs(candIds)
+            .where(cover.getOrElse(lit(true)))
+            .filter(col("graft_id").isInCollection(candIds.toSeq))
+            .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
+        } else history
+        Some(histCand
+          .join(sigB, "graft_id")
+          .join(histVerify, "hist_id")
+          .filter(agree >= threshold)
+          .select(col("graft_id").as(idCol)))
+      }
 
-    // within-batch: the text is in hand — exact-verified LSH pairs, min
-    // id survives (deterministic, matching Dedup.dedupNear's convention)
-    val batchPairs = graft.operators.Dedup.minhashNearDup(
-      batch, idCol, textCol, numHashes, bands, shingleN, threshold)
-    val dupInBatch = batchPairs.select(col("id_b").as(idCol)).distinct()
+    val batchCand = candidates.filter(!col("graft_hist"))
+      .select("graft_id", "graft_other")
+    val candShingles = batch.select(col(idCol).as("graft_id"), col(textCol))
+      .join(batchCand.select("graft_id")
+        .unionByName(batchCand.select(col("graft_other").as("graft_id"))),
+        Seq("graft_id"), "left_semi")
+      .select(col("graft_id"),
+        sort_array(array_distinct(shingles(col(textCol), shingleN))).as("graft_sh"))
+      .persist() // both sides of the pair verify
+    val dupInBatch = batchCand
+      .join(candShingles.withColumnRenamed("graft_sh", "sh_a"), "graft_id")
+      .join(candShingles.select(col("graft_id").as("graft_other"),
+        col("graft_sh").as("sh_b")), "graft_other")
+      .filter(jaccardSortedDistinct(col("sh_a"), col("sh_b")) >= threshold)
+      .select(col("graft_id").as(idCol))
 
     val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
+      .join(dupOfHistory.fold(dupInBatch)(_.unionByName(dupInBatch)),
+        Seq(idCol), "left_anti")
       .persist()
-    (admitted, candidates)
+    (admitted, () => { candidates.unpersist(); candShingles.unpersist(); () })
   }
 
   /** Read a log store (or one sub-table) at a pinned version from an
@@ -1415,7 +1469,6 @@ object StreamOps {
       .getOrElse(sigB
         .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
         .limit(0))
-      .persist()
     val bandH = CommitLog.readSub(spark, store, "bands", Some(baseV))
       .map(_.filter(col("batch") =!= batchId).select("hist_id", "band", "bucket"))
       .getOrElse(history
@@ -1428,7 +1481,7 @@ object StreamOps {
       .filter(col("n") <= maxBucket)
       .select("band", "bucket")
 
-    val (admitted, candidates) = nearDupAdmitCore(
+    val (admitted, release) = nearDupAdmitCore(
       batch, idCol, textCol, sigB, bandB, history, bandH, smallBuckets,
       // manifest-stats file pruning on top of the pushed range cover:
       // the candidate ids' gap-split ranges drop whole files whose
@@ -1438,7 +1491,7 @@ object StreamOps {
         .getOrElse(history.select(
           col("hist_id").as("graft_id"), col("hist_sig").as("graft_sig"))
           .limit(0)),
-      hasHistory, numHashes, bands, shingleN, threshold, maxVerifyFetch)
+      hasHistory, numHashes, shingleN, threshold, maxVerifyFetch)
 
     // stage all three tables, publish ONE manifest. The writes also
     // materialize the admitted cache, so the inner caches release here.
@@ -1466,8 +1519,7 @@ object StreamOps {
       statsCol = Some("graft_id")) // band/bucket files lack it → no stats
     sigA.unpersist()
     sigB.unpersist()
-    history.unpersist()
-    candidates.unpersist()
+    release()
     admitted
   }
 
@@ -2316,18 +2368,10 @@ object StreamOps {
     * `(chunkIdx << width) | chunkValue`. With `expand` the radius-1 flip
     * neighbors ride along (probe side); without, exact keys only (store
     * side). Width ≤ 32 because chunks ≥ 2, so the packed key is always
-    * non-negative. */
+    * non-negative. One native loop (org.apache.spark.sql.graft.HammingBandKeys). */
   private def hammingBandKeys(
-      hash: Column, nChunks: Int, expand: Boolean): Column = {
-    val width = 64 / nChunks
-    val mask = (1L << width) - 1
-    def cv(c: Int) = shiftrightunsigned(hash, c * width).bitwiseAND(mask)
-    def packed(c: Int, v: Column) = lit(c.toLong * (1L << width)) + v
-    array((0 until nChunks).flatMap { c =>
-      packed(c, cv(c)) +: (if (!expand) Nil
-      else (0 until width).map(b => packed(c, cv(c).bitwiseXOR(1L << b))))
-    }: _*)
-  }
+      hash: Column, nChunks: Int, expand: Boolean): Column =
+    org.apache.spark.sql.graft.BandKeyExpressions.hammingBandKeys(hash, nChunks, expand)
 
   /** The per-batch step behind [[hammingNearDupStream]] (driveable
     * directly in tests and backfills). Returns the admitted rows of
@@ -2377,28 +2421,37 @@ object StreamOps {
     val histFull = () =>
       spark.read.parquet(storePath).filter(col("batch") =!= batchId)
 
-    val admitted = hammingAdmitCore(
+    val (admitted, release) = hammingAdmitCore(
       batch, idCol, hashCol, histRead, histFull, hasHistory, maxHamming,
       nChunks, maxBucketFetch)
     // admitted support exploded to exact band rows → this batch's own
     // partition (the write materializes the admitted cache)
     admittedBandRows(admitted, idCol, hashCol, nChunks)
       .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+    release()
     admitted
     }
   }
 
   /** The candidate → verify → admit middle shared by the legacy and
-    * commit-log hamming store modes. Cross-batch: the batch SUPPORT
-    * (distinct hash values) probes bucket-mate history with the radius-1
-    * flip expansion, exact `bit_count(xor) <= maxHamming` verify, and
-    * ids recover by a hash join (whole identical classes drop together).
-    * Within-batch: distinct-first — non-representative class members
-    * drop against their min-id representative (hamming 0), and the
-    * support-level representative pairs drop their larger id. The union
-    * equals the pairwise larger-id-drops convention exactly (a non-min
-    * member always drops; a class min drops iff a smaller-id close row
-    * exists, whose own class min is a smaller-id close REPRESENTATIVE). */
+    * commit-log hamming store modes: ONE banded candidate join. The batch
+    * SUPPORT (distinct hash values, each keyed by its identical class's
+    * min-id representative) probes with the radius-1 flip expansion
+    * against a build side holding the bucket-mate history rows and the
+    * exact keys of the batch support itself; candidates verify by exact
+    * `bit_count(xor) <= maxHamming`. A support value drops when it is
+    * close to a history hash, or to another batch value whose
+    * representative has the smaller id. A batch row then drops when its
+    * value dropped (whole identical classes drop together) or when it is
+    * not its class's representative (hamming 0 to a smaller id). This
+    * equals the pairwise larger-id-drops convention exactly: a non-min
+    * member always drops, and a class min drops iff a smaller-id close
+    * row exists, whose own class min is a smaller-id close
+    * representative.
+    *
+    * Returns (admitted [persisted], release) — the caller runs `release`
+    * (the class cache) once its store write has materialized `admitted`,
+    * and unpersists `admitted` after its sink. */
   private def hammingAdmitCore(
       batch: DataFrame,
       idCol: String,
@@ -2408,48 +2461,46 @@ object StreamOps {
       hasHistory: Boolean,
       maxHamming: Int,
       nChunks: Int,
-      maxBucketFetch: Int): DataFrame = {
+      maxBucketFetch: Int): (DataFrame, () => Unit) = {
     val radius = maxHamming / nChunks
-    val (repPairs, members, _) = graft.operators.Dedup.hammingRepPairs(
-      batch, idCol, hashCol, maxHamming, nChunks)
-    // the cross-batch probe needs only the batch's distinct hash VALUES
-    val support = batch.filter(col(hashCol).isNotNull)
-      .select(col(hashCol).as("graft_sh")).distinct()
-
-    val probe = support
-      .withColumn("graft_bucket",
-        explode(hammingBandKeys(col("graft_sh"), nChunks, expand = radius == 1)))
-      .select("graft_sh", "graft_bucket").distinct().persist()
+    // one row per distinct hash; cached, since the bucket probe, both
+    // join sides and the row-level drop all read it (the exploded probe
+    // is ~chunks·(width+1) times larger and cheap to re-derive)
+    val classes = batch.filter(col(hashCol).isNotNull)
+      .groupBy(col(hashCol).as("graft_sh"))
+      .agg(min(col(idCol)).as("graft_rep"))
+      .persist()
+    val probe = classes.withColumn("graft_bucket",
+      explode(hammingBandKeys(col("graft_sh"), nChunks, expand = radius == 1)))
     val capProbe = math.min(maxBucketFetch.toLong + 1L, Int.MaxValue.toLong).toInt
     val batchBuckets: Array[Any] =
       if (hasHistory) probe.select("graft_bucket").distinct().limit(capProbe)
         .collect().map(_.get(0))
       else Array.empty[Any]
-    val dupOfHistory =
-      if (!hasHistory || batchBuckets.isEmpty) batch.select(col(idCol)).limit(0)
+    val batchSide = classes.select(
+      explode(hammingBandKeys(col("graft_sh"), nChunks, expand = false))
+        .as("graft_bucket"),
+      col("graft_sh").as("other_sh"), col("graft_rep").as("other_rep"))
+    val build =
+      if (batchBuckets.isEmpty) batchSide
       else {
         val src = if (batchBuckets.length <= maxBucketFetch)
           histRead(batchBuckets) else histFull()
-        val dupHashes = probe
-          .join(src.select(col("graft_bucket"), col("graft_sh").as("hist_sh")),
-            Seq("graft_bucket"))
-          .filter(graft.functions.TextFunctions
-            .hamming64(col("graft_sh"), col("hist_sh")) <= maxHamming)
-          .select("graft_sh").distinct()
-        batch.join(dupHashes, batch(hashCol) === dupHashes("graft_sh"))
-          .select(col(idCol)).distinct()
+        src.select(col("graft_bucket"), col("graft_sh").as("other_sh"),
+          lit(null).cast(batchSide.schema("other_rep").dataType).as("other_rep"))
+          .unionByName(batchSide)
       }
-    val dupInBatch = members
-      .filter(col("graft_id") =!= col("graft_rep"))
-      .select(col("graft_id").as(idCol))
-      .unionByName(repPairs.select(col("rep_b").as(idCol)))
-      .distinct()
-    val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-    admitted.count() // materialize before releasing the probe cache
-    probe.unpersist()
-    admitted
+    val dupHashes = probe.join(build, Seq("graft_bucket"))
+      .filter(col("other_rep").isNull || col("other_rep") < col("graft_rep"))
+      .filter(graft.functions.TextFunctions
+        .hamming64(col("graft_sh"), col("other_sh")) <= maxHamming)
+      .select("graft_sh").distinct()
+    val dropped = batch.join(classes, batch(hashCol) === classes("graft_sh"))
+      .join(dupHashes.withColumn("graft_dup", lit(true)), Seq("graft_sh"), "left")
+      .filter(col(idCol) =!= col("graft_rep") || col("graft_dup").isNotNull)
+      .select(col(idCol))
+    val admitted = batch.join(dropped, Seq(idCol), "left_anti").persist()
+    (admitted, () => { classes.unpersist(); () })
   }
 
   /** Admitted rows → store rows: the distinct admitted support exploded
@@ -2554,7 +2605,7 @@ object StreamOps {
           .filter(col("graft_bucket").isInCollection(buckets.toSeq))
       }
     }
-    val admitted = hammingAdmitCore(
+    val (admitted, release) = hammingAdmitCore(
       batch, idCol, hashCol, histRead, () => histAll.get, hasHistory,
       maxHamming, nChunks, maxBucketFetch)
     val staging = graft.operators.Swap.Suffix.staging(
@@ -2569,6 +2620,7 @@ object StreamOps {
         "chunks" -> nChunks.toString),
       extraTouched = Seq(CommitLog.SerialToken),
       statsCol = Some("graft_bucket"))
+    release()
     admitted
   }
 

@@ -308,4 +308,80 @@ class AvroSpec extends AnyFunSuite {
       .name("u").`type`(multi).noDefault().endRecord()
     intercept[IllegalArgumentException] { Avro.toSparkSchema(rec) }
   }
+
+  /** Write `records` as one container file under a fresh dir with
+    * avro's own DataFileWriter — a file graft did not write. */
+  private def writeExternal(schema: org.apache.avro.Schema,
+      records: Seq[org.apache.avro.generic.GenericRecord]): String = {
+    val dir = tmp("graft_avro_ext")
+    val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
+      new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](schema))
+    w.create(schema, new java.io.File(dir, "part-00000.avro"))
+    try records.foreach(w.append) finally w.close()
+    dir
+  }
+
+  test("bare timestamp-millis array elements and map values decode by " +
+    "their own logical type (externally written file)") {
+    import org.apache.avro.{LogicalTypes, Schema}
+    val millis = LogicalTypes.timestampMillis().addToSchema(Schema.create(Schema.Type.LONG))
+    val localMillis = LogicalTypes.localTimestampMillis()
+      .addToSchema(Schema.create(Schema.Type.LONG))
+    val micros = LogicalTypes.timestampMicros().addToSchema(Schema.create(Schema.Type.LONG))
+    val sch = org.apache.avro.SchemaBuilder.record("ext").namespace("graft.test").fields()
+      .name("ts").`type`(Schema.createArray(millis)).noDefault()
+      .name("by_key").`type`(Schema.createMap(millis)).noDefault()
+      .name("local").`type`(Schema.createArray(
+        Schema.createUnion(Schema.create(Schema.Type.NULL), localMillis))).noDefault()
+      .name("us").`type`(Schema.createArray(micros)).noDefault()
+      .endRecord()
+    val ms = Seq(1700000000123L, -5L)
+    val rec = new org.apache.avro.generic.GenericData.Record(sch)
+    rec.put("ts", java.util.Arrays.asList(ms.map(Long.box): _*))
+    rec.put("by_key", java.util.Map.of("a", Long.box(1234L)))
+    rec.put("local", java.util.Arrays.asList(Long.box(ms.head), null))
+    rec.put("us", java.util.Arrays.asList(Long.box(ms.head * 1000L)))
+    val dir = writeExternal(sch, Seq(rec))
+
+    val got = Avro.read(spark, dir).select(
+      transform(col("ts"), t => unix_millis(t)),
+      map_values(transform_values(col("by_key"), (_, t) => unix_millis(t))),
+      transform(col("local"), t => unix_millis(t.cast("timestamp"))),
+      transform(col("us"), t => unix_millis(t))).head()
+    assert(got.getSeq[Long](0) == ms)
+    assert(got.getSeq[Long](1) == Seq(1234L))
+    assert(got.getSeq[Any](2) == Seq(ms.head, null))
+    assert(got.getSeq[Long](3) == Seq(ms.head), "micros elements stay micros")
+  }
+
+  test("a null array element or map value whose schema has no null branch " +
+    "refuses loudly, naming the position") {
+    val st = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("tags", ArrayType(StringType, containsNull = false)),
+      StructField("attrs", MapType(StringType, LongType, valueContainsNull = false)),
+      StructField("notes", ArrayType(StringType, containsNull = true))))
+    val sch = Avro.toAvroSchema(st)
+    val enc = Avro.recordWriter(sch, st)
+    // a lying upstream row (Spark's encoders would reject it) reaches the
+    // compiled encoder; the refusal names where, before the datum writer
+    val e = intercept[IllegalArgumentException] {
+      enc(Row(2L, Seq("a", null), Map("k" -> 1L), Seq.empty))
+    }
+    assert(e.getMessage.contains("array element of field tags") &&
+      e.getMessage.contains("does not accept null"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      enc(Row(3L, Seq("a"), Map("k" -> null), Seq.empty))
+    }
+    assert(e2.getMessage.contains("map value of field attrs") &&
+      e2.getMessage.contains("does not accept null"), e2.getMessage)
+    // rows that fit the schema, a null in a nullable array included,
+    // encode into a file avro's own writer accepts and graft reads back
+    val dir = writeExternal(sch, Seq(
+      enc(Row(1L, Seq("a", "b"), Map("k" -> 1L), Seq("n", null)))))
+    val back = Avro.read(spark, dir).head()
+    assert(back.getSeq[String](1) == Seq("a", "b"))
+    assert(back.getMap[String, Long](2) == Map("k" -> 1L))
+    assert(back.getSeq[String](3) == Seq("n", null))
+  }
 }
